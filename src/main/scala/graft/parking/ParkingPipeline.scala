@@ -1,6 +1,6 @@
 package graft.parking
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * goldens (423 complexes, sentinel counts, the missing 090 band).
   *
   * Deliberate divergences from the reference (SURVEY §5: "replicate
-  * capabilities, not bugs"): fixed pivot band lists (the reference's
+  * capabilities, not bugs"): a fixed area-band list (the reference's
   * data-dependent pivot silently drops empty bands); apartment model
   * fits apartment data (the reference fits shop data via the
   * `apt_df <- method1_shop_df` copy-paste at R:1036); the stratified
@@ -67,84 +67,101 @@ object ParkingPipeline {
   /** G4 — data-driven discovery of complex-level columns (R:174–191):
     * a column is complex-level iff the sum over complexes of its
     * per-complex distinct-non-NA count is ≤ #complexes. Driver-side
-    * metadata: one 1-row aggregate, collected. */
+    * metadata: ONE action — the sums and the number of complexes (the
+    * per-complex rows, the NULL-key group included, as `distinct()`
+    * counts it) come back in the same 1-row aggregate. */
   def complexLevelColumns(df: DataFrame, key: String): Seq[String] = {
-    val others = df.columns.filterNot(_ == key)
+    val others = df.columns.filterNot(_ == key).toSeq
     val perGroup = df.groupBy(key)
       .agg(countDistinct(col(others.head)).as(others.head),
-        others.tail.map(c => countDistinct(col(c)).as(c)).toSeq: _*)
+        others.tail.map(c => countDistinct(col(c)).as(c)): _*)
     val sums = perGroup
-      .agg(sum(col(others.head)).as(others.head),
-        others.tail.map(c => sum(col(c)).as(c)).toSeq: _*)
+      .agg(count(lit(1)), others.map(c => sum(col(c))): _*)
       .head()
-    val nKeys = df.select(key).distinct().count()
-    key +: others.filter(c => sums.getAs[Long](c) <= nKeys).toSeq
+    val nKeys = sums.getLong(0)
+    key +: others.zipWithIndex.collect {
+      case (c, i) if sums.getAs[Long](i + 1) <= nKeys => c }
   }
 
-  /** P1 + G5 — per-complex dimension table (R:194–196): project the
-    * complex-level columns, dedup to one row per complex. */
-  def perComplex(df: DataFrame): DataFrame = {
-    val cols = complexLevelColumns(df, "단지코드")
-    df.select(cols.map(col): _*).dropDuplicates("단지코드")
-  }
+  /** The per-complex aggregate expressions, defined once: every
+    * per-complex frame below is one `groupBy(단지코드)` over some of
+    * them. */
+  private def byComplex(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    df.groupBy("단지코드").agg(aggs.head, aggs.tail: _*)
 
-  /** C3 + G1 — total residential area per complex (R:264–272):
-    * Σ 전용면적 × 전용면적별세대수. */
-  def totalArea(df: DataFrame): DataFrame =
-    df.groupBy("단지코드")
-      .agg(sum(col("전용면적") * col("전용면적별세대수")).as("총면적"))
+  /** `first` of each complex-level column — exactly what
+    * `dropDuplicates(단지코드)` is rewritten to. */
+  private def dimAggs(df: DataFrame): Seq[Column] =
+    complexLevelColumns(df, "단지코드").tail.map(c => first(col(c)).as(c))
+
+  /** C3 — Σ 전용면적 × 전용면적별세대수 (R:264–272). */
+  private def totalAreaAgg: Column =
+    sum(col("전용면적") * col("전용면적별세대수")).as("총면적")
 
   /** Fixed band list 10..100 — pinned, unlike the reference's
     * data-dependent pivot (R:290–312), so train and test always share
     * a schema; the empty 090 band becomes an all-zero column. */
   val bands: Seq[Int] = (1 to 10).map(_ * 10)
 
-  /** C4 + V1 — area-band household histogram (R:290–315): R's
-    * `round(전용면적, -1)` is half-to-EVEN → `bround`; clamp [10,100]
-    * (R:292–296 `pmax/pmin`); pivot with zero-fill and `str_pad`-style
-    * column names (R:306). */
-  def areaBandPivot(df: DataFrame): DataFrame = {
+  /** C4 — R's `round(전용면적, -1)` is half-to-EVEN → `bround`, clamped
+    * to [10,100] (R:292–296 `pmax/pmin`); one zero-filled household
+    * sum per band, named `str_pad`-style (R:306). */
+  private def bandAggs: Seq[Column] = {
     val band = least(greatest(bround(col("전용면적"), -1), lit(10.0)),
       lit(100.0)).cast("int")
-    val pivoted = df.withColumn("band", band)
-      .groupBy("단지코드").pivot("band", bands)
-      .sum("전용면적별세대수")
-      .na.fill(0, bands.map(_.toString))
-    bands.foldLeft(pivoted) { (d, b) =>
-      d.withColumnRenamed(b.toString, f"전용면적_$b%03d")
-    }
+    bands.map(b => coalesce(sum(when(band === b, col("전용면적별세대수"))),
+      lit(0L)).as(f"전용면적_$b%03d"))
   }
 
-  /** V2 variant — the same pivot restricted to one building type
-    * (R:856–877 `split()` + per-group pivot ≡ filtered pivot). */
+  /** G9 — household-weighted mean with all-NULL groups kept NULL
+    * (R:922–940: the `group_split`+`map_df` loop as one aggregate). */
+  private def rentAggs: Seq[Column] = Seq("임대보증금", "임대료").map { c =>
+    (sum(when(col(c).isNotNull, col(c) * col("전용면적별세대수")))
+      / sum(when(col(c).isNotNull, col("전용면적별세대수")))).as(c)
+  }
+
+  /** P1 + G5 — per-complex dimension table (R:194–196): the
+    * complex-level columns, one row per complex. */
+  def perComplex(df: DataFrame): DataFrame = byComplex(df, dimAggs(df))
+
+  /** C3 + G1 — total residential area per complex (R:264–272). */
+  def totalArea(df: DataFrame): DataFrame = byComplex(df, Seq(totalAreaAgg))
+
+  /** C4 + V1 — area-band household histogram (R:290–315) as ten
+    * conditional sums in one aggregate, not a pivot (which plans a
+    * (단지코드, band) aggregate under a second one); every band
+    * exists even when empty. */
+  def areaBandPivot(df: DataFrame): DataFrame = byComplex(df, bandAggs)
+
+  /** V2 variant — the same histogram restricted to one building type
+    * (R:856–877 `split()` + per-group pivot ≡ filtered histogram). */
   def areaBandPivotFor(df: DataFrame, buildingType: String): DataFrame =
     areaBandPivot(df.filter(col("임대건물구분") === buildingType))
 
-  /** G9 — per-complex household-weighted mean rent with all-NULL
-    * groups kept NULL (R:922–940: the `group_split`+`map_df` loop as
-    * ONE hash aggregate) — the pre-impute frame both imputers
-    * ([[weightedRent]] median, [[knnImputeRentsOnComplex]] k-NN)
-    * start from. */
-  def weightedRentRaw(df: DataFrame): DataFrame = {
-    def weighted(c: String) =
-      (sum(when(col(c).isNotNull, col(c) * col("전용면적별세대수")))
-        / sum(when(col(c).isNotNull, col("전용면적별세대수")))).as(c)
-    df.groupBy("단지코드")
-      .agg(weighted("임대보증금"), weighted("임대료"))
-  }
+  /** G9 — per-complex weighted mean rents, NULL where a complex has no
+    * priced unit: the pre-impute frame both imputers (median in
+    * [[featureTableOf]], k-NN in [[knnImputeRentsOnComplex]]) start
+    * from. */
+  def weightedRentRaw(df: DataFrame): DataFrame = byComplex(df, rentAggs)
 
-  /** C6 — [[weightedRentRaw]] + exact-median imputation (R:941–943,
-    * the ACTIVE imputation path of the reference). */
-  def weightedRent(df: DataFrame): DataFrame = {
-    val perComplexRent = weightedRentRaw(df)
-    val meds = perComplexRent.agg(
-      expr("percentile(`임대보증금`, 0.5)"),
-      expr("percentile(`임대료`, 0.5)")).head()
-    perComplexRent
-      .withColumn("임대보증금",
-        coalesce(col("임대보증금"), lit(meds.getDouble(0))))
-      .withColumn("임대료", coalesce(col("임대료"), lit(meds.getDouble(1))))
-  }
+  /** Every per-complex feature in ONE aggregate: dimension columns,
+    * 총면적, the ten bands and the weighted rents. Keeps the NULL-key
+    * group; callers drop it, as an inner join on 단지코드 would. */
+  private def perComplexFeatures(df: DataFrame): DataFrame =
+    byComplex(df, dimAggs(df) ++ (totalAreaAgg +: bandAggs) ++ rentAggs)
+
+  /** C6 — exact-median imputation of the NULL weighted rents
+    * (R:941–943, the ACTIVE imputation path of the reference). The
+    * medians over all of `perKey`'s rows are a window over the whole
+    * frame, evaluated in the same plan: no action, and no second
+    * aggregate that Catalyst would prune down to the rent sums and
+    * shuffle on 단지코드 again. */
+  private def medianImputed(perKey: DataFrame): DataFrame =
+    perKey.select(perKey.columns.toSeq.map {
+      case c @ ("임대보증금" | "임대료") =>
+        coalesce(col(c), expr(s"percentile(`$c`, 0.5) OVER ()")).as(c)
+      case c => col(c)
+    }: _*)
 
   /** The COMMENTED-OUT reference imputation (R:820–829
     * `knnImputation`, packages loaded at R:56–60 but never called),
@@ -157,10 +174,8 @@ object ParkingPipeline {
     * imputed 임대보증금); ParkingSpec pins the full output against a
     * driver-side brute-force recomputation. */
   def knnImputeRentsOnComplex(s: SparkSession, path: String): DataFrame = {
-    val cleaned = clean(loadTrain(s, path))
-    val base = perComplex(cleaned)
-      .join(broadcast(totalArea(cleaned)), Seq("단지코드"))
-      .join(broadcast(weightedRentRaw(cleaned)), Seq("단지코드"))
+    val base = perComplexFeatures(clean(loadTrain(s, path)))
+      .filter(col("단지코드").isNotNull)
       .select(col("단지코드"), col("총세대수").cast("double").as("총세대수"),
         col("공가수"), col("단지내주차면수"), col("총면적"),
         col("임대보증금"))
@@ -172,21 +187,22 @@ object ParkingPipeline {
   }
 
   /** Entry point A+B (SURVEY §3.1–3.2): the full per-complex feature
-    * table — dedup → enrich (area, bands, rents) → impute transit
+    * table — dedup + enrich (area, bands, rents) in one aggregate →
+    * median-impute rents → drop the NULL-key group → impute transit
     * NAs (C5, R:350–358) → derived ratios (C3, R:421–424). One lazy
-    * DAG; every join is a broadcast (423-row dimension side).
-    * `featureTableOf` takes an already-cleaned frame so the SAME
-    * enrichment runs on train.csv and (label-less) test.csv — the
-    * submission path needs both under one schema. */
+    * DAG with one shuffle on 단지코드 and no join; the only action is
+    * [[complexLevelColumns]]. `featureTableOf` takes an
+    * already-cleaned frame so the SAME enrichment runs on train.csv
+    * and (label-less) test.csv — the submission path needs both under
+    * one schema. The input is cached, not the aggregate: the seeded
+    * random forest's bootstrap follows the partition layout of the
+    * table it is fit on, and caching the aggregate changes that
+    * layout and so the submission's predictions. */
   def featureTableOf(cleaned0: DataFrame): DataFrame = {
     val cleaned = cleaned0.cache()
-    val dim = perComplex(cleaned)
-    val enriched = dim
-      .join(broadcast(totalArea(cleaned)), Seq("단지코드"))
-      .join(broadcast(areaBandPivot(cleaned)), Seq("단지코드"))
-      .join(broadcast(weightedRent(cleaned)), Seq("단지코드"))
+    medianImputed(perComplexFeatures(cleaned))
+      .filter(col("단지코드").isNotNull)
       .na.fill(0.0, Seq("지하철역수", "버스정류장수"))
-    enriched
       .withColumn("세대당주차면수", col("단지내주차면수") / col("총세대수"))
       .withColumn("대중교통수", col("지하철역수") + col("버스정류장수"))
   }
@@ -194,13 +210,19 @@ object ParkingPipeline {
   def featureTable(s: SparkSession, path: String): DataFrame =
     featureTableOf(clean(loadTrain(s, path)))
 
+  /** FIXTURES.md §A: 지역 + 22 double shares,
+    * `{10대미만, 10대, …, 100대} × {(여자), (남자)}`. */
+  private val ageGenderSchema = StructType(StructField("지역", StringType) +:
+    ("10대미만" +: (1 to 10).map(a => s"${a}0대")).flatMap(a =>
+      Seq("여자", "남자").map(g => StructField(s"$a($g)", DoubleType))))
+
   /** Demographic enrichment (R:1040–1044, the commented-out
     * `merge(x=apt_df, y=age_gender, by="지역")`): age_gender_info.csv
     * is a 16-region × 22-share dimension — the canonical tiny
-    * broadcast join; the fact side never shuffles. */
+    * broadcast join; the fact side never shuffles. Declared schema,
+    * like every CSV read here: no inference scan. */
   def loadAgeGender(s: SparkSession, path: String): DataFrame =
-    s.read.option("header", true).option("encoding", "UTF-8")
-      .option("inferSchema", true).csv(path)
+    graft.sources.CsvIO.readCsv(s, path, ageGenderSchema)
 
   def withDemographics(features: DataFrame, ageGender: DataFrame): DataFrame =
     features.join(broadcast(ageGender), Seq("지역"), "left")
